@@ -328,16 +328,8 @@ object Bench {
     }
     def remainingSec: Double = timeBudget - (System.nanoTime() - tMain0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.functions.GraftExtensions.cpus.toString
+    val spark = graft.functions.GraftExtensions.session()
     spark.sparkContext.setLogLevel("WARN")
     // The deliberately-unpartitioned summary windows would spam hundreds of
     // audited-benign `No Partition Defined` WARNs into the bench tail,
@@ -348,7 +340,6 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    graft.functions.GraftExtensions.register(spark)
 
     // Observed metrics (the silent-cap audit trail: jaccard_maxdf_*,
     // lsh_maxbucket_*, neardup_maxdf_* drop counts) are delivered via the
@@ -381,48 +372,7 @@ object Bench {
     val selected = if (args.nonEmpty) SparkEntry.queries.filter(q => args.contains(q._1))
                    else SparkEntry.queries
     val tWarm0 = System.nanoTime()
-    try graft.queries.PipelineQueries.warmSharedStores(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: warmup failed: $e") }
-    // louvain-family caches: warm only when a consumer is selected (an
-    // --only run without them should not pay the build)
-    try if (Seq("g_louvain", "g_louvain2", "g_leiden").exists(selected.contains))
-      graft.queries.GraphQueries.warmShared(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: louvain warmup failed: $e") }
-    // LPA labeling: one fixpoint, two consumers (g_label_prop emits it,
-    // g_louvain's baseline guard reads it) — same discipline
-    try if (Seq("g_label_prop", "g_louvain").exists(selected.contains))
-      graft.queries.GraphQueries.warmLpa(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: lpa warmup failed: $e") }
-    // duplicate-cluster CC labeling: one fixpoint, three consumers — same
-    // discipline (attribution `cc_labels`/`_warmup` via sharedStores)
-    try if (Seq("d8_cc_components", "d16_cluster_sizes", "d20_cluster_keep_best")
-        .exists(selected.contains))
-      graft.queries.PipelineQueries.warmCcLabels(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: cc-labels warmup failed: $e") }
-    // flagship store: built once per JVM from the FIXED fixture corpus —
-    // pre-pay it untimed when its consumer is selected (attribution
-    // `_warmup` via sharedStores, the louvain-cache discipline)
-    try if (selected.contains("pipeline_flagship"))
-      graft.queries.FlagshipQueries.warmStore(spark)
-    catch { case e: Throwable => System.err.println(s"bench: flagship warmup failed: $e") }
-    // k-NN graph stores: the hnsw serving walk and the append patch read
-    // frozen graphs — build them untimed (attribution `knng_*`/`_warmup`
-    // via sharedStores) so the timed entries measure serving, not index
-    // construction (round-15 verdict #3); sim_nndescent_knng/
-    // sim_knng_capped remain the timed build entries
-    try {
-      if (selected.contains("sim_hnsw_search"))
-        graft.queries.PipelineQueries.warmHnswLayers(spark, sfDir)
-      if (selected.contains("sim_knng_append") ||
-          selected.contains("stream_knng_append"))
-        graft.queries.PipelineQueries.warmKnngAppendBase(spark, sfDir)
-    } catch { case e: Throwable => System.err.println(s"bench: knng warmup failed: $e") }
-    // shared two-batch replay stagings: cross-entry stores paid by the
-    // alphabetically-first twin otherwise (measured ~75 s inside
-    // stream_double_quantiles at the 100× probe) — pre-pay untimed
-    try if (selected.keys.exists(_.startsWith("stream_")))
-      graft.queries.StreamingQueries.warmStagedReplays(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"bench: staging warmup failed: $e") }
+    SparkEntry.warmFor(spark, sfDir, selected.keySet)
     val warmupSec = (System.nanoTime() - tWarm0) / 1e9
     // Attribution contract: only queries whose plans carry CollectMetrics
     // can contribute to `observed`, so only THOSE pay a bus drain — once

@@ -1,9 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 
 /** Plan-audit aid: print `.explain("formatted")` for registry queries.
   * Usage: runMain graft.PlanDump <sfDir> <queryName...>
-  *        runMain graft.PlanDump <sfDir> --audit-windows
+  *        runMain graft.PlanDump <sfDir> --audit-windows | --audit-joins |
+  *                                       --dump-joins | --audit-sorts
   *
   * `--audit-windows` walks EVERY registry query's optimized plan and lists
   * the ones containing an unpartitioned Window (the `WindowExec: No
@@ -12,6 +16,14 @@ import org.apache.spark.sql.SparkSession
   * the log warning, which Bench silences — is what keeps a FUTURE
   * accidental corpus-sized global window visible: a query outside the
   * allowlist fails the audit (exit 1).
+  *
+  * `--audit-sorts` lists the entries whose global sort's range exchange
+  * reads expensive compute (join / generate / object map / window /
+  * expand) with no materialized exchange in between: the range exchange
+  * samples its child, so that subtree runs twice. Each hit is a candidate
+  * for a manual [[graft.ops.SkewOps.sortFence]], adopted only where an A/B
+  * shows the recompute costs more than the fence's extra shuffle (most
+  * candidates measured as fence losses; see OPTIMIZATION_r17.md).
   */
 object PlanDump {
 
@@ -243,20 +255,47 @@ object PlanDump {
     walk(df.queryExecution.executedPlan).distinct
   }
 
+  /** Node kinds whose recompute under range sampling is costly. */
+  private val ExpensiveNodes =
+    Seq("Join", "Generate", "MapPartitions", "MapElements", "Window", "Expand")
+
+  /** Expensive node names under each range exchange of the (pre-AQE)
+    * executed plan, up to the next exchange (a materialized stage).
+    */
+  private def sortSampledCompute(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    def expensiveBelow(p: SparkPlan): Seq[String] = p match {
+      case _: Exchange => Nil
+      case _ =>
+        val n = p.getClass.getSimpleName
+        (if (ExpensiveNodes.exists(n.contains)) Seq(n) else Nil) ++
+          p.children.flatMap(expensiveBelow)
+    }
+    def rangeExchangeChildren(p: SparkPlan): Seq[SparkPlan] = {
+      val here = p match {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+          Seq(e.child)
+        case _ => Nil
+      }
+      here ++ p.children.flatMap(rangeExchangeChildren) ++ (p match {
+        case a: AdaptiveSparkPlanExec => rangeExchangeChildren(a.initialPlan)
+        case _ => Nil
+      })
+    }
+    rangeExchangeChildren(df.queryExecution.executedPlan).flatMap(expensiveBelow).distinct
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.functions.GraftExtensions.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftExtensions.register(spark)
-    if (args.drop(1).headOption.contains("--audit-windows")) {
+    if (args.drop(1).headOption.contains("--audit-sorts")) {
+      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+        try {
+          val bad = sortSampledCompute(fn(spark, sfDir))
+          if (bad.nonEmpty) println(f"$name%-32s ${bad.mkString(", ")}")
+        } catch { case e: Throwable => println(s"$name PLAN FAILED: ${e.toString.take(100)}") }
+      }
+    } else if (args.drop(1).headOption.contains("--audit-windows")) {
       val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         val n = try unpartitionedWindows(fn(spark, sfDir))
                 catch { case e: Throwable => println(s"$name: PLAN FAILED: $e"); 0 }
@@ -298,12 +337,11 @@ object PlanDump {
       }
       println(s"join audit clean: ${JoinExpectations.size} entries pinned")
     } else {
-      // SPARK_GRAFT_PLAN_WARM=1: materialize the cross-entry shared stores
-      // first (as Bench/Verify-with-warmups sessions do), so dumps show the
-      // InMemoryRelation substitution a consumer entry actually runs with
+      // SPARK_GRAFT_PLAN_WARM=1: build the shared stores the dumped entries
+      // read first (as Bench does), so dumps show the InMemoryRelation
+      // substitution a consumer entry actually runs with
       if (sys.env.get("SPARK_GRAFT_PLAN_WARM").contains("1"))
-        try graft.queries.PipelineQueries.warmSharedStores(spark, sfDir)
-        catch { case e: Throwable => println(s"shared-store warmup failed: $e") }
+        SparkEntry.warmFor(spark, sfDir, args.drop(1).toSet)
       args.drop(1).foreach { name =>
         println(s"===== $name =====")
         SparkEntry.queries(name)(spark, sfDir).explain("formatted")

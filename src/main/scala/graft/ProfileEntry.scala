@@ -1,32 +1,25 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Committed profiling main, outside the driver contract: run one
   * or more registry entries in a fresh session and print every Spark job's
   * wall time + description, plus the entry's prep/exec split — the
   * job-level attribution the Bench totals can't show.
   *
-  * Usage: ProfileEntry <sfDir> <entry> [entry...]   (env: SPARK_GRAFT_CPUS)
+  * Usage: ProfileEntry <sfDir> <entry> [entry...]
+  * (env: SPARK_GRAFT_CPUS; PROFILE_SHUFFLE / PROFILE_AQE override the
+  * session's shuffle partitions / AQE switch; PROFILE_JOBS=1, PROFILE_OPS=1
+  * print per-job and per-operator detail)
   * Repeat an entry name to measure warm re-execution.
   */
 object ProfileEntry {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("PROFILE_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("PROFILE_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.functions.GraftExtensions.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftExtensions.register(spark)
+    sys.env.get("PROFILE_SHUFFLE").foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
+    sys.env.get("PROFILE_AQE").foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String, Int)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -45,19 +38,7 @@ object ProfileEntry {
     })
     spark.range(1000).selectExpr("sum(id)").collect()
     // warm shared stores untimed, as the bench does
-    try graft.queries.PipelineQueries.warmSharedStores(spark, sfDir) catch { case _: Throwable => () }
-    try if (names.exists(Seq("g_louvain", "g_louvain2", "g_leiden").contains))
-      graft.queries.GraphQueries.warmShared(spark, sfDir) catch { case _: Throwable => () }
-    try if (names.exists(Seq("g_label_prop", "g_louvain").contains))
-      graft.queries.GraphQueries.warmLpa(spark, sfDir) catch { case _: Throwable => () }
-    try if (names.exists(Seq("d8_cc_components", "d16_cluster_sizes",
-        "d20_cluster_keep_best").contains))
-      graft.queries.PipelineQueries.warmCcLabels(spark, sfDir) catch { case _: Throwable => () }
-    try if (names.contains("pipeline_flagship")) graft.queries.FlagshipQueries.warmStore(spark) catch { case _: Throwable => () }
-    try if (names.contains("sim_hnsw_search")) graft.queries.PipelineQueries.warmHnswLayers(spark, sfDir) catch { case _: Throwable => () }
-    try if (names.contains("sim_knng_append") || names.contains("stream_knng_append"))
-      graft.queries.PipelineQueries.warmKnngAppendBase(spark, sfDir) catch { case _: Throwable => () }
-    try if (names.exists(_.startsWith("stream_"))) graft.queries.StreamingQueries.warmStagedReplays(spark, sfDir) catch { case _: Throwable => () }
+    SparkEntry.warmFor(spark, sfDir, names.toSet)
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       done.clear()

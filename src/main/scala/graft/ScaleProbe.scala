@@ -1,7 +1,6 @@
 package graft
 
 import graft.llm.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-behavior probe: multiply the documents corpus N× (half exact
@@ -21,17 +20,8 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val only = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.functions.GraftExtensions.session()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
 
     def enabled(name: String): Boolean = only.isEmpty || only.exists(name.contains)
     def timed(name: String)(body: => Long): Unit =

@@ -36,4 +36,32 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     entries.collect { case (name, _, sql) if sql != null => name -> sql }.toMap
+
+  /** Cross-entry shared stores in warm-up order: (store, the entries that
+    * read it, the hook that builds it). The corpus stores behind
+    * `warmSharedStores` are read across the registry, so any selection
+    * builds them.
+    */
+  private[graft] def warmTable: Seq[(String, Set[String], (SparkSession, String) => Unit)] = Seq(
+    ("corpus", queries.keySet, PipelineQueries.warmSharedStores),
+    ("louvain", Set("g_louvain", "g_louvain2", "g_leiden"), GraphQueries.warmShared),
+    ("lpa", Set("g_label_prop", "g_louvain"), GraphQueries.warmLpa),
+    ("cc-labels", Set("d8_cc_components", "d16_cluster_sizes", "d20_cluster_keep_best"),
+      PipelineQueries.warmCcLabels),
+    ("flagship", Set("pipeline_flagship"), (s, _) => FlagshipQueries.warmStore(s)),
+    ("hnsw-layers", Set("sim_hnsw_search"), PipelineQueries.warmHnswLayers),
+    ("knng-append-base", Set("sim_knng_append", "stream_knng_append"),
+      PipelineQueries.warmKnngAppendBase),
+    ("staged-replays", queries.keySet.filter(_.startsWith("stream_")),
+      StreamingQueries.warmStagedReplays))
+
+  /** Build, untimed, every shared store a `selected` entry reads, so no
+    * entry's timing depends on being a store's first consumer (attribution
+    * `_warmup` in `PipelineQueries.sharedStoreMaterializers`). A store that
+    * fails to build is logged to stderr and left to its consumers.
+    */
+  def warmFor(spark: SparkSession, sfDir: String, selected: collection.Set[String]): Unit =
+    for ((store, readers, warm) <- warmTable if readers.exists(selected.contains))
+      try warm(spark, sfDir)
+      catch { case e: Throwable => System.err.println(s"warmup: $store store failed: $e") }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,13 @@ object Verify {
     // optional third arg: comma-separated query names (local iteration only;
     // the driver always runs the full registry)
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.functions.GraftExtensions.session()
     spark.sparkContext.setLogLevel("WARN")
     // audited-benign unpartitioned-window WARNs silenced here as in Bench;
     // PlanDump --audit-windows owns detection of new offenders
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    graft.functions.GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
     // a failing query must surface as a RED row, not silently shrink the
     // correctness file: record name -> first exception line for _errors.json

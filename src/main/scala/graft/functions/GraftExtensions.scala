@@ -1,22 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * functions for SQL use. Activate with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`,
+  * or build the session with [[GraftExtensions.session]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftExtensions.All.foreach(ext.injectFunction)
-    // materialize-before-sample fence for global sorts over expensive
-    // subtrees (see SortSampleFenceRule) — physical-plan only, results
-    // and logical/optimized plans are untouched
-    ext.injectQueryStagePrepRule(s => SortSampleFenceRule(s))
-  }
 }
 
 object GraftExtensions {
@@ -84,8 +79,31 @@ object GraftExtensions {
     * only apply at session construction; a same-JVM getOrCreate reuses the
     * existing session and silently skips them).
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+  def register(spark: SparkSession): Unit =
     All.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
+
+  /** Worker threads of the local session: `SPARK_GRAFT_CPUS`, else every
+    * core the JVM sees.
+    */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The session every main runs on: the extensions, `local[cpus]` (or the
+    * given master), one shuffle partition per core, UTC, no UI, and the
+    * functions registered on it. Like any `getOrCreate`, it returns an
+    * already-active session when there is one.
+    */
+  def session(master: String = s"local[$cpus]"): SparkSession = {
+    val spark = SparkSession.builder()
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    register(spark)
+    spark
+  }
 }

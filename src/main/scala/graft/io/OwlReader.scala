@@ -1,7 +1,7 @@
 package graft.io
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.io.ByteArrayInputStream
@@ -37,46 +37,18 @@ object OwlReader {
 
   /** All raw triples from the OWL files in `dir` matching `pattern`
     * (reference directory scan: PathUtilities.java:24-30). Distributed:
-    * one task per file via the binaryFile source.
-    *
-    * `permissive=true` routes unparseable files to a skip (logged on the
-    * executor) instead of failing the job — at corpus scale one corrupt file
-    * must not kill the run; pair with [[corruptFiles]] to audit what was
-    * dropped. Default is fail-fast, matching the reference.
+    * one task per file via the binaryFile source. Fail-fast, like the
+    * reference: an unparseable file fails the job, and the error names it.
     */
-  def triples(spark: SparkSession, paths: Seq[String], permissive: Boolean = false): Dataset[TripleRow] = {
+  def triples(spark: SparkSession, paths: Seq[String]): Dataset[TripleRow] = {
     import spark.implicits._
-    binaryFiles(spark, paths).flatMap { case (name, bytes) =>
-      if (!permissive) parseTriples(name, bytes)
-      else
-        try parseTriples(name, bytes)
-        catch {
-          case e: Exception =>
-            System.err.println(s"[OwlReader] skipping corrupt file $name: ${e.getMessage}")
-            Seq.empty[TripleRow]
-        }
-    }
-  }
-
-  /** Audit of unparseable files: (src_file, error). Empty when all parse. */
-  def corruptFiles(spark: SparkSession, paths: Seq[String]): Dataset[(String, String)] = {
-    import spark.implicits._
-    binaryFiles(spark, paths).flatMap { case (name, bytes) =>
-      try { parseTriples(name, bytes); None }
-      catch { case e: Exception => Some((name, String.valueOf(e.getMessage))) }
-    }
+    binaryFiles(spark, paths).flatMap { case (name, bytes) => parseTriples(name, bytes) }
   }
 
   /** Harvested term dictionary rows (reference: OntologyElementParser.java:121-126). */
   def terms(spark: SparkSession, paths: Seq[String]): Dataset[TermRow] = {
     import spark.implicits._
     binaryFiles(spark, paths).flatMap { case (name, bytes) => parseElements(name, bytes)._1 }
-  }
-
-  /** Distinct ontology prefix ids per file (reference: OntologyElementParser.java:109-118). */
-  def ids(spark: SparkSession, paths: Seq[String]): Dataset[IdRow] = {
-    import spark.implicits._
-    binaryFiles(spark, paths).flatMap { case (name, bytes) => parseElements(name, bytes)._2 }
   }
 
   /** One metadata row per file (reference: OntologyElementParser.java:146-184). */
@@ -153,9 +125,21 @@ object OwlReader {
     * rdf:about / rdf:resource / rdf:nodeID / rdf:ID, typed node elements,
     * nested node elements (blank nodes, e.g. owl:Restriction), property
     * attributes, parseType=Resource/Collection/Literal, xml:lang and
-    * rdf:datatype literals.
+    * rdf:datatype literals. A malformed document fails with its file name.
     */
-  def parseTriples(fileName: String, bytes: Array[Byte]): Seq[TripleRow] = {
+  def parseTriples(fileName: String, bytes: Array[Byte]): Seq[TripleRow] =
+    naming(fileName)(triplesOf(fileName, bytes))
+
+  /** Rethrows a parse failure with the name of the file that caused it: a
+    * task failure otherwise reports only the XML parser's line and column.
+    */
+  private def naming[T](fileName: String)(parse: => T): T =
+    try parse catch {
+      case e: Exception => throw new IllegalArgumentException(
+        s"cannot parse OWL file $fileName: ${e.getMessage}", e)
+    }
+
+  private def triplesOf(fileName: String, bytes: Array[Byte]): Seq[TripleRow] = {
     val out = mutable.ArrayBuffer.empty[TripleRow]
     var stmtIdx = 0L
     var blankCtr = 0
@@ -369,9 +353,13 @@ object OwlReader {
     * rdf:about contribute a prefix id (term before '_', excluding "valid") and
     * — when they have at least one rdfs:label descendant — a term->(purl,label)
     * entry where the LAST such element in document order wins (HashMap put) and
-    * the FIRST label descendant of that element is used.
+    * the FIRST label descendant of that element is used. A malformed
+    * document fails with its file name.
     */
-  def parseElements(fileName: String, bytes: Array[Byte]): (Seq[TermRow], Seq[IdRow], OntoMeta) = {
+  def parseElements(fileName: String, bytes: Array[Byte]): (Seq[TermRow], Seq[IdRow], OntoMeta) =
+    naming(fileName)(elementsOf(fileName, bytes))
+
+  private def elementsOf(fileName: String, bytes: Array[Byte]): (Seq[TermRow], Seq[IdRow], OntoMeta) = {
     val termMap = mutable.LinkedHashMap.empty[String, TermRow]
     val idSet = mutable.LinkedHashSet.empty[String]
     var title: String = null

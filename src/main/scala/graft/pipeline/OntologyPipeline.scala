@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.GraftExtensions
 import graft.io.{GraphSink, OwlReader}
 import graft.ops.{GraphOps, TripleOps, UriOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -37,16 +38,9 @@ object OntologyPipeline {
       "usage: OntologyPipeline <oboDir> <outDir> [phenotypePattern] [--last-wins]")
     val lastWins = flags.contains("--last-wins")
     val pattern = if (pos.length >= 3) pos(2) else "cl\\.owl"
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-ontology-pipeline")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = sys.env.get("SPARK_MASTER")
+      .fold(GraftExtensions.session())(GraftExtensions.session(_))
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
     try run(spark, pos(0), pos(1), lastWins = lastWins, phenotypePattern = pattern)
     finally spark.stop()
   }

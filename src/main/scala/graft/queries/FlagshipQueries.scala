@@ -100,7 +100,7 @@ object FlagshipQueries {
     })
 
   /** Materialize the store in the bench's UNTIMED warmup window. */
-  def warmStore(s: SparkSession): Unit =
+  private[graft] def warmStore(s: SparkSession): Unit =
     PipelineQueries.currentEntry.withValue("_warmup") { builtStore(s); () }
 
   val all: Seq[RelationalQueries.Entry] = Seq(

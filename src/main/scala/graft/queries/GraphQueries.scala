@@ -580,8 +580,8 @@ object GraphQueries {
     })
   }
 
-  /** Bench warmup hook for [[lpaShared]] (attribution `_warmup`). */
-  def warmLpa(s: SparkSession, d: String): Unit =
+  /** [[graft.SparkEntry.warmFor]] hook for [[lpaShared]] (attribution `_warmup`). */
+  private[graft] def warmLpa(s: SparkSession, d: String): Unit =
     PipelineQueries.currentEntry.withValue("_warmup") { lpaShared(s, d).count(); () }
 
   /** The UNREFINED level-2 pyramid projection (g_louvain2's assignment),
@@ -615,7 +615,7 @@ object GraphQueries {
     * window, and its number depends on registry composition. proj2 builds
     * l1 transitively; attribution records `_warmup`.
     */
-  def warmShared(s: SparkSession, d: String): Unit =
+  private[graft] def warmShared(s: SparkSession, d: String): Unit =
     PipelineQueries.currentEntry.withValue("_warmup") {
       louvainProj2Shared(s, d).count()
       ()

@@ -567,7 +567,7 @@ object PipelineQueries {
     * analyzed plan and read it back. No-op when the persist gate is off
     * (degenerate inputs — nothing is cached, so nothing to pre-pay).
     */
-  def warmSharedStores(s: SparkSession, d: String): Unit =
+  private[graft] def warmSharedStores(s: SparkSession, d: String): Unit =
     if (shouldPersist(d)) currentEntry.withValue("_warmup") {
       shinglesShared(s, d).count()
       sigsShared(s, d).count()
@@ -602,8 +602,8 @@ object PipelineQueries {
     })
   }
 
-  /** Bench warmup hook for [[ccLabelsShared]] (attribution `_warmup`). */
-  def warmCcLabels(s: SparkSession, d: String): Unit =
+  /** [[graft.SparkEntry.warmFor]] hook for [[ccLabelsShared]] (attribution `_warmup`). */
+  private[graft] def warmCcLabels(s: SparkSession, d: String): Unit =
     currentEntry.withValue("_warmup") { ccLabelsShared(s, d).count(); () }
 
   // ---- k-NN graph stores (round-15 verdict #3/#4) ------------------------
@@ -654,9 +654,9 @@ object PipelineQueries {
     * (called per selected consumer), so the timed entries measure SERVING
     * — the walk / the append patch — not index construction.
     */
-  def warmHnswLayers(s: SparkSession, d: String): Unit =
+  private[graft] def warmHnswLayers(s: SparkSession, d: String): Unit =
     currentEntry.withValue("_warmup") { hnswLayersShared(s, d); () }
-  def warmKnngAppendBase(s: SparkSession, d: String): Unit =
+  private[graft] def warmKnngAppendBase(s: SparkSession, d: String): Unit =
     currentEntry.withValue("_warmup") { knngAppendBaseShared(s, d); () }
 
   /** md5-hyperplane CTEs shared by the NN-descent oracles: `plv(p, plane)`

@@ -211,7 +211,7 @@ object StreamingQueries {
       (o.filter(col("o_orderkey") <= cut), o.filter(col("o_orderkey") > cut))
     }
 
-  def warmStagedReplays(s: SparkSession, d: String): Unit =
+  private[graft] def warmStagedReplays(s: SparkSession, d: String): Unit =
     PipelineQueries.currentEntry.withValue("_warmup") {
       stagedEvents(s, d); stagedLineitem(s, d); stagedDocs(s, d)
       stagedOrders(s, d) // smallest; the r15 close showed it attributed

@@ -19,6 +19,8 @@ object StreamingIngest {
 
   /** Start the ingest stream: OWL files under `landingDir` → parquet triple
     * store at `storeDir` partitioned by src_file. Caller owns the lifecycle.
+    * Files must land whole: write each one outside `landingDir` and rename
+    * it in, since a micro-batch may list a file that is still being written.
     */
   def start(spark: SparkSession, landingDir: String, storeDir: String,
             checkpointDir: String): StreamingQuery = {

@@ -119,7 +119,7 @@ class OwlReaderSpec extends AnyFunSuite {
     assert(meta.root == "http://purl.obolibrary.org/obo/CL_0000000")
   }
 
-  test("permissive mode skips corrupt files; corruptFiles audits them") {
+  test("corrupt files fail the read and the error names them") {
     val spark = TestSpark.spark
     val dir = java.nio.file.Files.createTempDirectory("graft-corrupt")
     try {
@@ -127,15 +127,22 @@ class OwlReaderSpec extends AnyFunSuite {
         java.nio.file.Paths.get(TestSpark.fixture("macrophage.owl")), dir.resolve("good.owl"))
       java.nio.file.Files.write(dir.resolve("bad.owl"), "<rdf:RDF <broken".getBytes("UTF-8"))
       val files = OwlReader.listFilesMatchingPattern(dir.toString, ".*\\.owl")
-      // fail-fast default: job dies on the corrupt file
-      intercept[org.apache.spark.SparkException] {
+      // fail-fast: job dies on the corrupt file
+      val e = intercept[org.apache.spark.SparkException] {
         OwlReader.triples(spark, files).count()
       }
-      // permissive: good file's triples survive
-      assert(OwlReader.triples(spark, files, permissive = true).count() > 0)
-      val corrupt = OwlReader.corruptFiles(spark, files).collect()
-      assert(corrupt.map(_._1).toSeq == Seq("bad.owl"))
+      assert(TestSpark.messages(e).exists(_.contains("bad.owl")))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("truncated and non-XML documents fail both parsers, naming the file") {
+    for (name <- Seq("truncated.owl", "not-xml.owl")) {
+      val bytes = TestSpark.readFixture(s"corrupt/$name")
+      val t = intercept[IllegalArgumentException](OwlReader.parseTriples(name, bytes))
+      assert(t.getMessage.contains(name))
+      val el = intercept[IllegalArgumentException](OwlReader.parseElements(name, bytes))
+      assert(el.getMessage.contains(name))
+    }
   }
 
   // --- round-2 parser fidelity (ADVICE.md items) ---

@@ -60,4 +60,20 @@ class PipelineSpec extends AnyFunSuite {
     val got = merged.collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     assert(got == Map(("CL", "1") -> "new", ("CL", "2") -> "keep", ("GO", "3") -> "ins"))
   }
+
+  test("a truncated or non-XML OWL file fails the run and the error names it") {
+    for (bad <- Seq("truncated.owl", "not-xml.owl")) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-corrupt-run")
+      try {
+        for (f <- Seq("macrophage.owl", s"corrupt/$bad"))
+          java.nio.file.Files.copy(java.nio.file.Paths.get(TestSpark.fixture(f)),
+            dir.resolve(f.stripPrefix("corrupt/")))
+        val e = intercept[Exception] {
+          OntologyPipeline.run(spark, dir.toString, s"$dir/out", phenotypePattern = "macrophage\\.owl")
+        }
+        val chain = TestSpark.messages(e)
+        assert(chain.exists(_.contains(bad)), chain.mkString(" <- "))
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }

@@ -18,6 +18,14 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(qs.size >= 49)
   }
 
+  test("every warm-table reader is a registry entry") {
+    val names = SparkEntry.queries.keySet
+    for ((store, readers, _) <- SparkEntry.warmTable) {
+      assert(readers.nonEmpty, s"$store store has no reader")
+      assert(readers.subsetOf(names), s"$store store readers not in the registry: ${readers -- names}")
+    }
+  }
+
   test("every query runs and returns rows at sf0.001") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try { if (fn(TestSpark.spark, "/root/testdata/sf0.001").count() >= 0) None else Some(name) }

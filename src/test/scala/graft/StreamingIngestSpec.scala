@@ -267,15 +267,21 @@ class StreamingIngestSpec extends AnyFunSuite {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-attr-state")
     val in = base.resolve("in"); Files.createDirectories(in)
+    // a batch is written outside the watched dir and renamed in whole: a
+    // micro-batch that listed only some of its part files would split it
+    def land(batch: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      batch.write.parquet(s"$base/staging/$name")
+      Files.move(base.resolve(s"staging/$name"), in.resolve(name),
+        StandardCopyOption.ATOMIC_MOVE)
+    }
     try {
       val hour = 3600000000L
       // batch 1: user 1 clicks at t=1h and views at t=2h, then purchases at
       // t=3h (within-batch attribution: first=click, last=view, n=2);
       // user 2 clicks at 1h only.
-      Seq((101L, 1L, "click", 1 * hour), (102L, 1L, "view", 2 * hour),
+      land(Seq((101L, 1L, "click", 1 * hour), (102L, 1L, "view", 2 * hour),
           (103L, 1L, "purchase", 3 * hour), (104L, 2L, "click", 1 * hour))
-        .toDF("event_id", "user_id", "event_type", "ts_us")
-        .write.parquet(s"$in/b1")
+        .toDF("event_id", "user_id", "event_type", "ts_us"), "b1")
       val schema = spark.read.parquet(s"$in/b1").schema
       val stream = spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true").parquet(in.toString)
@@ -286,10 +292,9 @@ class StreamingIngestSpec extends AnyFunSuite {
         // batch 2: user 2's purchase at 5h must find its batch-1 click
         // through the STORE; user 3's purchase has touches only OUTSIDE
         // the 7-day lookback (8 days earlier) and attributes to nothing.
-        Seq((201L, 2L, "purchase", 5 * hour), (202L, 3L, "purchase", 200 * hour),
+        land(Seq((201L, 2L, "purchase", 5 * hour), (202L, 3L, "purchase", 200 * hour),
             (203L, 3L, "click", 7 * hour))
-          .toDF("event_id", "user_id", "event_type", "ts_us")
-          .write.parquet(s"$in/b2")
+          .toDF("event_id", "user_id", "event_type", "ts_us"), "b2")
         q.processAllAvailable()
         val got = spark.read.parquet(s"$base/attrib")
           .collect().map(r => r.getLong(0) ->

@@ -34,4 +34,8 @@ object TestSpark {
 
   def readFixture(name: String): Array[Byte] =
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture(name)))
+
+  /** Messages along a throwable's cause chain, outermost first. */
+  def messages(t: Throwable): List[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toList
 }
